@@ -9,7 +9,9 @@ import org.apache.spark.sql.SparkSession
 object SparkSessionFactory {
 
   def local(cores: Int, appName: String = "graft"): SparkSession = {
-    val s = SparkSession.builder()
+    // in-process chmod/readlink for file: paths (LocalFileSystems); set
+    // before getOrCreate, ahead of the JVM's first file: FileSystem
+    val s = LocalFileSystems.register(SparkSession.builder())
       .appName(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)

@@ -348,12 +348,18 @@ object AtomicRewrite {
                       keepVersions: Int = 2,
                       bucketCount: Option[Int] = None): Unit =
     writePartitionsRows(spark, root, df, partitionBy,
-      replaced.map { r =>
-        (r.select(partitionBy.map(org.apache.spark.sql.functions.col): _*)
-          .distinct().collect().toSeq,
-          org.apache.spark.sql.types.StructType(
-            partitionBy.map(c => r.schema(c))))
-      }, keepVersions, bucketCount)
+      replaced.map(replacedRows(_, partitionBy)), keepVersions, bucketCount)
+
+  /** The distinct partition-value rows of a `replaced` frame, made
+    * distinct after the collect: callers mostly pass a [[literalFrame]],
+    * which collects with no Spark job, where a SQL `distinct` would run a
+    * two-job shuffle; a frame already made distinct costs the same either
+    * way. */
+  private def replacedRows(r: DataFrame, partitionBy: Seq[String])
+      : (Seq[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) =
+    (r.select(partitionBy.map(org.apache.spark.sql.functions.col): _*)
+      .collect().distinct.toSeq,
+      org.apache.spark.sql.types.StructType(partitionBy.map(c => r.schema(c))))
 
   /** [[writePartitions]] taking the replaced set as ALREADY-COLLECTED
     * partition-value rows (columns = `partitionBy`, in order). The
@@ -387,12 +393,7 @@ object AtomicRewrite {
                       replaced: Option[DataFrame] = None,
                       keepVersions: Int = 2): () => Unit =
     stagePartitionsRows(spark, root, df, partitionBy,
-      replaced.map { r =>
-        (r.select(partitionBy.map(org.apache.spark.sql.functions.col): _*)
-          .distinct().collect().toSeq,
-          org.apache.spark.sql.types.StructType(
-            partitionBy.map(c => r.schema(c))))
-      }, keepVersions)
+      replaced.map(replacedRows(_, partitionBy)), keepVersions)
 
   private[graft] def stagePartitionsRows(spark: SparkSession, root: String,
                       df: DataFrame,
@@ -1029,11 +1030,16 @@ object AtomicRewrite {
   }
 
   private def containsDataFiles(f: FileSystem, dir: Path): Boolean =
-    f.exists(dir) && {
-      val it = f.listFiles(dir, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
+    f.exists(dir) && dataFiles(f, dir).hasNext
+
+  /** Parquet files under `dir`, recursively (partitioned layouts nest),
+    * by plain `listStatus`: `listFiles` builds a `LocatedFileStatus` per
+    * file, whose owner and mode the local filesystem reads with an `ls`
+    * fork. Lazy, so an existence probe stops at the first file. */
+  private def dataFiles(f: FileSystem, dir: Path): Iterator[Path] =
+    f.listStatus(dir).iterator.flatMap { s =>
+      if (s.isDirectory) dataFiles(f, s.getPath)
+      else Iterator(s.getPath).filter(_.getName.endsWith(".parquet"))
     }
 
   /** Mirror of Spark's partition-path value encoding for the types we
@@ -1170,11 +1176,7 @@ object AtomicRewrite {
       else cur.repartitionByRange(parts, clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
     write(spark, root, out, partitionBy, sortBy = clusterBy)
-    val newDir = new Path(root, s"v=${v + 1}")
-    val it = f.listFiles(newDir, true) // recursive: partitioned layouts nest
-    var n = 0
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    n
+    dataFiles(f, new Path(root, s"v=${v + 1}")).size
   }
 
   /** Bytes of the data files the current version actually references

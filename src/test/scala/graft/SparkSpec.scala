@@ -29,7 +29,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    // the production sessions' local filesystem (SparkSessionFactory)
+    val s = graft.core.LocalFileSystems.register(SparkSession.builder())
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
